@@ -18,7 +18,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_streams(streams: dict[str, DataFrame], base_dir: str,
@@ -29,22 +30,28 @@ def write_streams(streams: dict[str, DataFrame], base_dir: str,
     Returns the manifest dict: stream names, roles (datumdb*/labeldb*),
     schemas, and row counts — the queryable equivalent of the LMDB
     main-DB stream registry (serialize.py:463-471).
+
+    Jobs per stream: the parquet write, plus one count when
+    ``keys_per_file`` sizes the range partitioning. The manifest's
+    ``rows`` is an ``Observation`` on the write itself, placed above the
+    range exchange so its sampling job does not count rows too. Driver
+    memory is O(streams); no rows reach the driver.
     """
     manifest: dict = {"streams": {}}
     for name, df in streams.items():
         path = os.path.join(base_dir, name)
-        writer = df.write.mode("overwrite")
+        out = df
         if keys_per_file and key_col in df.columns:
-            n = df.count()
-            nfiles = max(1, n // keys_per_file)
-            df = df.repartitionByRange(nfiles, key_col)
-            writer = df.write.mode("overwrite")
-        writer.parquet(path)
+            nfiles = max(1, df.count() // keys_per_file)
+            out = df.repartitionByRange(nfiles, key_col)
+        rows = Observation()
+        (out.observe(rows, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite").parquet(path))
         manifest["streams"][name] = {
             "path": path,
             "role": "output" if name.startswith("labeldb") else "input",
             "schema": df.schema.jsonValue(),
-            "rows": df.count(),
+            "rows": rows.get["rows"],
         }
     os.makedirs(base_dir, exist_ok=True)
     with open(os.path.join(base_dir, "_catalog.json"), "w") as f:

@@ -59,22 +59,29 @@ def global_row_number(df: DataFrame, order_by: list[Column | str],
     Scale design (SURVEY §7 risk register): a bare
     ``row_number().over(Window.orderBy(...))`` sorts the world in ONE
     task. Instead: range-partition on the ordering, count each range,
-    and offset per-range row numbers by the cumulative counts — the
-    zipWithIndex pattern expressed in DataFrame ops. Each window then
-    sorts only its own range. The ranges stay contiguous, so keys equal
-    the global row_number while every partition works in parallel.
+    sort each range on its own, and number its rows by their position
+    in the sorted partition (``monotonically_increasing_id()`` minus
+    the partition id in its upper bits) plus the cumulative counts of
+    the ranges before it — the zipWithIndex pattern expressed in
+    DataFrame ops. The ranges stay contiguous, so keys equal the global
+    row_number while every partition works in parallel, and no
+    exchange follows the range partitioning.
 
     The ranged frame is persisted before the count job so the offsets
     and the keyed output observe the SAME physical partitioning — range
     sampling is rerun per job otherwise, and a nondeterministic upstream
     (sample, AQE-reshuffled input) could silently shift rows between
     ranges, duplicating/dropping keys. The cache lives until Spark
-    evicts it (LRU); callers running inside one action never notice.
+    evicts it (LRU) or ``release_range_caches()`` drops it.
 
-    The per-range count collect is O(num_ranges) driver memory — fine at
-    any scale (thousands of ranges, not rows). Also returns the total
-    row count n (free from the same counts) for rank-ratio functions
-    (ntile / percent_rank / cume_dist) that need it.
+    Jobs per call: the range-boundary sample and the per-range count
+    (which fills the cache); the keyed frame itself adds only a
+    per-partition sort to its consumer's plan. The per-range count
+    collect is O(num_ranges) driver memory — fine at any scale
+    (thousands of ranges, not rows). Also returns the total row count n
+    (free from the same counts) for rank-ratio functions (ntile /
+    percent_rank / cume_dist) that need it. Ties in ``order_by`` are
+    numbered in an arbitrary order, as with ``row_number``.
     """
     sess = df.sparkSession
     if num_ranges is None:
@@ -96,10 +103,11 @@ def global_row_number(df: DataFrame, order_by: list[Column | str],
                            for x in (pid, offsets[pid])]),
             F.col("__pid")),
         F.lit(0))
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (ranged
-           .withColumn(key_col,
-                       (F.row_number().over(w) + offset_expr).cast("bigint"))
+    # 0-based position in the sorted partition: the id's lower 33 bits
+    ordinal = (F.monotonically_increasing_id()
+               - F.shiftleft(F.spark_partition_id().cast("bigint"), 33))
+    out = (ranged.sortWithinPartitions(*order_cols)
+           .withColumn(key_col, (ordinal + 1 + offset_expr).cast("bigint"))
            .drop("__pid"))
     return out, acc
 
@@ -282,29 +290,62 @@ def assign_batches(df: DataFrame, batch_size: int, key_col: str = "key",
     reference's epoch math (serialize.py:670); the cutoff is a filter on
     the key, so Catalyst can push it to the scan when keys are stored.
     """
+    if not drop_remainder:
+        return df.withColumn(batch_col, batch_expr(key_col, batch_size))
+    return _whole_batches(df, batch_size, key_col, batch_col)[0]
+
+
+def _whole_batches(df: DataFrame, batch_size: int, key_col: str,
+                   batch_col: str) -> tuple[DataFrame, int]:
+    """Batch ids with the ragged tail dropped, and how many whole
+    batches are kept (one count job)."""
+    n_batches = df.count() // batch_size
     out = df.withColumn(batch_col, batch_expr(key_col, batch_size))
-    if drop_remainder:
-        n = df.count()
-        n_batches = n // batch_size
-        out = out.filter(F.col(batch_col) < n_batches)
-    return out
+    return out.filter(F.col(batch_col) < n_batches), n_batches
+
+
+# Rows per sorted range the feed streams to the driver (see _feed_ranges).
+_FEED_RANGE_ROWS = 1 << 16
+
+
+def _feed_ranges(n_batches: int, batch_size: int, partitions: int) -> int:
+    """Number of sorted ranges ``batch_iterator`` feeds ``n_batches``
+    whole batches from: at least ``partitions`` (the session's shuffle
+    partitions) so the sort runs in parallel, more only to keep each
+    range near ``_FEED_RANGE_ROWS`` rows, never more than one per batch."""
+    rows = n_batches * batch_size
+    return min(n_batches, max(partitions, -(-rows // _FEED_RANGE_ROWS)))
 
 
 def batch_iterator(df: DataFrame, batch_size: int, key_col: str = "key"):
     """ML hand-off (R3/M1 consumer contract, serialize.py:680-683):
-    iterate key-aligned batches as pandas DataFrames without collecting
-    the dataset on the driver.
+    iterate key-aligned batches ``(batch_id, [Row, ...])`` in key order,
+    the ragged tail dropped, without collecting the dataset on the
+    driver. Epoch looping (the reference's ``while 1``) belongs to the
+    caller.
 
-    ``toLocalIterator`` streams one partition at a time; upstream
-    ``repartitionByRange`` on the batch id keeps batches contiguous.
-    Epoch looping (the reference's ``while 1``) belongs to the caller.
+    The kept rows are globally sorted on ``(batch, key)`` over
+    ``_feed_ranges(...)`` ranges and streamed with
+    ``toLocalIterator(prefetchPartitions=True)``; a batch may span two
+    ranges. Jobs per call: one count (the ragged-tail cutoff and the
+    range count), the range-boundary sample, and one job per range —
+    at most max(shuffle partitions, rows / 65,536) ranges, never one
+    per batch. Driver memory: the partition being read plus the one
+    prefetched, each about max(65,536, batch_size) rows
+    (``_FEED_RANGE_ROWS``), plus the batch being built.
     """
-    batched = assign_batches(df, batch_size, key_col)
-    parts = batched.repartitionByRange(
-        max(1, batched.count() // max(batch_size, 1)), "batch", key_col)
+    batched, n_batches = _whole_batches(df, batch_size, key_col, "batch")
+    if n_batches == 0:
+        return
+    partitions = int(df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "32"))
+    ranges = _feed_ranges(n_batches, batch_size, partitions)
+    rows = (batched.repartitionByRange(ranges, "batch", key_col)
+            .sortWithinPartitions("batch", key_col)
+            .toLocalIterator(prefetchPartitions=True))
     current_id, buf = None, []
-    for row in parts.sortWithinPartitions("batch", key_col).toLocalIterator():
-        if current_id is not None and row["batch"] != current_id and buf:
+    for row in rows:
+        if row["batch"] != current_id and buf:
             yield current_id, buf
             buf = []
         current_id = row["batch"]

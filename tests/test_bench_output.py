@@ -93,3 +93,22 @@ def test_headline_names_are_registered_queries():
     engine.load_all()
     missing = [n for n in bench.HEADLINE if n not in engine.QUERIES]
     assert not missing, missing
+
+
+def test_plan_dump_requires_plans_subdir(tmp_path):
+    """tools/plan_dump.py once defaulted to a fixed plans/ subdirectory,
+    so a later optimization could silently overwrite an earlier one's
+    evidence. The subdirectory is now a required argument; the old
+    ``<tag> [query ...]`` form is refused before any Spark work."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(bench.__file__).resolve().parent
+    for args in (["before"], ["before", "pricing_summary"]):
+        out = subprocess.run(
+            [sys.executable, str(root / "tools" / "plan_dump.py"), *args],
+            capture_output=True, text=True, cwd=tmp_path, timeout=120)
+        assert out.returncode == 1, out.stderr[-500:]
+        assert "Usage: python tools/plan_dump.py <subdir> <tag>" in out.stderr
+    assert not (root / "plans" / "before").exists()

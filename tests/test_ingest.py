@@ -131,6 +131,44 @@ def test_w1_r1_sink_roundtrip(spark, tmp_path):
     assert joined.count() == 100  # MIMO alignment on key survives storage
 
 
+@pytest.mark.parametrize("keys_per_file", [None, 40])
+def test_write_streams_manifest_rows_match_readback(spark, tmp_path,
+                                                    keys_per_file):
+    """The manifest's row counts come from the write itself: they must
+    equal the rows read back, also when the stream's own plan ends in a
+    range exchange (whose sampling job must not be counted) and when
+    keys_per_file adds one; keys, roles and schemas stay as written."""
+    base = tmp_path / "store"
+    streams = {
+        "datumdb0": spark.range(1, 238).select(
+            F.col("id").alias("key"), (F.col("id") * 0.5).alias("x"))
+            .orderBy(F.col("key").desc()),
+        "labeldb0": spark.range(1, 238).select(
+            F.col("id").alias("key"), (F.col("id") % 7).alias("label"))
+            .filter(F.col("label") != 3),
+        "datumdb1": spark.range(0).select(F.col("id").alias("key")),
+    }
+    manifest = sink.write_streams(streams, str(base),
+                                  keys_per_file=keys_per_file)
+    back = sink.read_streams(spark, str(base))
+    assert manifest == {"streams": {
+        name: {"path": str(base / name),
+               "role": "output" if name.startswith("labeldb") else "input",
+               "schema": df.schema.jsonValue(),
+               "rows": back[name].count()}
+        for name, df in streams.items()}}
+    assert [m["rows"] for m in manifest["streams"].values()] == [237, 203, 0]
+    assert json.loads((base / "_catalog.json").read_text()) == manifest
+
+
+def _multi_range_frame(spark, n):
+    """Keys 1..n over several input partitions in scrambled order, so
+    the feed's sort, not the input layout, puts batches in order."""
+    return (spark.range(1, n + 1, numPartitions=5)
+            .select(F.col("id").alias("key"), (F.col("id") * 10).alias("v"))
+            .orderBy(F.hash("key")))
+
+
 def test_batch_iterator_contract(spark):
     """R3/M1 hand-off: key-aligned batches, remainder dropped, no
     driver-side collect of the whole set."""
@@ -140,6 +178,75 @@ def test_batch_iterator_contract(spark):
     assert [b for b, _ in batches] == [0, 1, 2]  # 10//3 = 3 batches
     for bid, rows in batches:
         assert [r["key"] for r in rows] == [bid * 3 + 1, bid * 3 + 2, bid * 3 + 3]
+
+    # a frame that spans several sorted ranges, batches straddling them
+    n, bs = 1000, 7
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert tensorize._feed_ranges(n // bs, bs, parts) > 1
+    batches = list(tensorize.batch_iterator(_multi_range_frame(spark, n), bs))
+    assert [b for b, _ in batches] == list(range(n // bs))
+    for bid, rows in batches:
+        assert [r["key"] for r in rows] == list(
+            range(bid * bs + 1, bid * bs + bs + 1))
+        assert [r["v"] for r in rows] == [r["key"] * 10 for r in rows]
+
+
+def _feed_jobs(spark, df, batch_size, group):
+    """Spark jobs one full pass of batch_iterator submits, and how many
+    batches it yielded."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "batch_iterator job count")
+    try:
+        n_batches = sum(1 for _ in tensorize.batch_iterator(df, batch_size))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), n_batches
+
+
+def test_batch_iterator_jobs_do_not_grow_with_batches(spark):
+    """The feed used to range-partition into one partition per batch,
+    and toLocalIterator runs one Spark job per partition: 10x the
+    batches was 10x the jobs. Its job count now follows the ranges."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    small, small_batches = _feed_jobs(
+        spark, _multi_range_frame(spark, 1_000), 10, "feed-1k")
+    large, large_batches = _feed_jobs(
+        spark, _multi_range_frame(spark, 10_000), 10, "feed-10k")
+    assert (small_batches, large_batches) == (100, 1_000)
+    assert large <= small < small_batches, (small, large)
+
+
+@pytest.mark.parametrize("case", ["nulls", "empty_ranges", "multi_column"])
+def test_global_row_number_equals_single_partition_row_number(spark, case):
+    """The range + in-partition-ordinal keying equals a one-partition
+    row_number() over the same unique ordering, including NULLs in the
+    order column, ranges left empty (more ranges than rows) and a
+    mixed-direction multi-column order."""
+    from pyspark.sql import Window
+
+    if case == "nulls":
+        df = spark.range(0, 300).select(
+            "id", F.when(F.col("id") % 4 == 0, None)
+            .otherwise(F.col("id") * 7 % 300).alias("a"))
+        order, ranges = [F.col("a"), F.col("id")], None
+    elif case == "empty_ranges":
+        df = spark.range(0, 5).select("id", (F.col("id") * 3).alias("a"))
+        order, ranges = [F.col("a")], 16
+    else:
+        df = spark.range(0, 500).select(
+            "id", (F.col("id") % 9).alias("a"),
+            F.when(F.col("id") % 11 == 0, None)
+            .otherwise(F.col("id") % 13).alias("b"))
+        order, ranges = [F.col("a").desc(), F.col("b"), F.col("id").desc()], 6
+    keyed, n = tensorize.global_row_number(df, order, "rn", ranges)
+    want = df.withColumn("want", F.row_number().over(Window.orderBy(*order)))
+    try:
+        got = {r["id"]: r["rn"] for r in keyed.select("id", "rn").collect()}
+        exp = {r["id"]: r["want"] for r in want.select("id", "want").collect()}
+    finally:
+        tensorize.release_range_caches()
+    assert n == len(exp)
+    assert got == exp
 
 
 def test_json_corrupt_records_are_captured_not_fatal(spark, tmp_path):

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for headline (or named) queries to
-plans/r{N}/<query>_<tag>.txt — the optimization round's evidence files.
+plans/<subdir>/<query>_<tag>.txt — an optimization's evidence files.
 
-Usage: python tools/plan_dump.py <tag> [query ...]
+Usage: python tools/plan_dump.py <subdir> <tag> [query ...]
+  subdir   plans/ subdirectory to write, e.g. 'r16' (required)
   tag      'before' | 'after' (file suffix)
   query    names; default = bench.HEADLINE
-Env: SPARK_GRAFT_PLANS_DIR (default 'r15') picks the plans/ subdir.
 """
 
 from __future__ import annotations
@@ -20,13 +20,15 @@ from new_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    subdir, tag = sys.argv[1:3]
     import bench
-    names = sys.argv[2:] or list(bench.HEADLINE)
+    names = sys.argv[3:] or list(bench.HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r15"))
+        "plans", subdir)
     os.makedirs(out_dir, exist_ok=True)
     engine.load_all()
     spark = get_spark(app_name=f"plan_dump_{tag}")
